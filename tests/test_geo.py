@@ -135,6 +135,156 @@ def test_pip_join_left_semantics(spark):
     assert rows == {(1, 7)}
 
 
+def test_pip_join_rejects_unknown_how(spark):
+    p = spark.createDataFrame([(1, 5.0, 5.0)], "pid long, x double, y double")
+    for how in ("outer", "Left", "right"):
+        with pytest.raises(ValueError, match="how="):
+            pip_join(p, index=object(), how=how)
+
+
+def test_pip_join_outside_extent_is_unassigned(spark):
+    """Cell keys clamp into the extent, so a point outside it must not
+    inherit the polygon owning the clamped border cell."""
+    ring = polygon_wkb(np.array(
+        [[0, 0], [87500, 0], [87500, 87500], [0, 87500], [0, 0]], float))
+    b = spark.createDataFrame([(1, bytearray(ring))],
+                              "boundary_id long, polygon_wkb binary")
+    p = spark.createDataFrame(
+        [(1, -5000.0, 100.0), (2, 100.0, -20.0), (3, 100.0, 100.0)],
+        "pid long, x double, y double")
+    for hybrid in (True, False):
+        rows = {(r.pid, r.boundary_id)
+                for r in pip_join(p, b, how="left", hybrid=hybrid).collect()}
+        assert rows == {(1, None), (2, None), (3, 1)}, hybrid
+    # a polygon reaching past the extent: every cell is interior, yet the
+    # points outside the extent still need the exact test
+    big = polygon_wkb(np.array(
+        [[-1e4, -1e4], [8e5, -1e4], [8e5, 8e5], [-1e4, 8e5], [-1e4, -1e4]]))
+    b = spark.createDataFrame([(2, bytearray(big))],
+                              "boundary_id long, polygon_wkb binary")
+    p = p.union(spark.createDataFrame([(4, -2e4, 100.0)], p.schema))
+    rows = {(r.pid, r.boundary_id) for r in pip_join(p, b, how="inner").collect()}
+    assert rows == {(1, 2), (2, 2), (3, 2)}
+
+
+def lattice_rings(n: int = 4, size: float = 40000.0, seed: int = 3,
+                  origin=(10000.0, 10000.0)) -> list[np.ndarray]:
+    """n x n quads over a shared-vertex lattice jittered by up to 0.2 of a
+    quad: edges cut through cells at every resolution."""
+    rng = np.random.default_rng(seed)
+    g = np.arange(n + 1) * size
+    vx, vy = np.meshgrid(g + origin[0], g + origin[1], indexing="ij")
+    vx = vx + rng.uniform(-0.2, 0.2, vx.shape) * size
+    vy = vy + rng.uniform(-0.2, 0.2, vy.shape) * size
+    return [np.array([[vx[a, b], vy[a, b]] for a, b in
+                      ((i, j), (i + 1, j), (i + 1, j + 1), (i, j + 1), (i, j))])
+            for j in range(n) for i in range(n)]
+
+
+def refined_fixture() -> list[np.ndarray]:
+    """Seeded non-aligned, non-overlapping polygons: a triangle inside one
+    res-7 cell, a concave L, a jittered quad lattice, and a quad reaching
+    outside the extent."""
+    small = np.array([[192000.0, 52000.0], [194100.0, 51700.0],
+                      [193600.0, 53900.0], [192000.0, 52000.0]])
+    ell = np.array([[230000, 20000], [330000, 25000], [328000, 71000],
+                    [281000, 69000], [279000, 131000], [231000, 128000],
+                    [230000, 20000]], float)
+    outside = np.array([[400000, -30000], [470000, -26000], [466000, 40000],
+                        [402000, 37000], [400000, -30000]], float)
+    return [small, ell, *lattice_rings(), outside]
+
+
+def even_odd(rings, ids, x, y) -> np.ndarray:
+    """Brute-force even-odd test of every point against every ring, first
+    ring wins; -1 where none contains the point."""
+    out = np.full(len(x), -1, dtype=np.int64)
+    for bid, ring in zip(ids, rings):
+        x1, y1, x2, y2 = ring[:-1, 0], ring[:-1, 1], ring[1:, 0], ring[1:, 1]
+        crosses = (y1[None, :] > y[:, None]) != (y2[None, :] > y[:, None])
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xi = (x2 - x1) * (y[:, None] - y1) / (y2 - y1) + x1
+        inside = ((crosses & (x[:, None] < xi)).sum(axis=1) % 2) == 1
+        out[inside & (out < 0)] = bid
+    return out
+
+
+def refined_boundaries(spark):
+    rings = refined_fixture()
+    ids = np.arange(len(rings)) * 10 + 3
+    return spark.createDataFrame(
+        [(int(i), bytearray(polygon_wkb(r))) for i, r in zip(ids, rings)],
+        "boundary_id long, polygon_wkb binary"), rings, ids
+
+
+def test_pip_join_refined_matches_bruteforce(spark):
+    from osmgraft.geo.pip import PipIndex
+
+    b, rings, ids = refined_boundaries(spark)
+    rng = np.random.default_rng(12)
+    x = np.r_[rng.uniform(-40000, 500000, 3500), rng.uniform(191500, 194500, 500)]
+    y = np.r_[rng.uniform(-40000, 200000, 3500), rng.uniform(51500, 54500, 500)]
+    p = spark.createDataFrame(
+        [(i, float(a), float(c)) for i, (a, c) in enumerate(zip(x, y))],
+        "pid long, x double, y double")
+    want = even_odd(rings, ids, x, y)
+    assert (want >= 0).sum() > 1000 and (want == 3).sum() > 50
+    index = PipIndex.build(b)
+    assert index.submap is not None and index.reaches_outside
+    for how in ("left", "inner"):
+        hybrid = {r.pid: r.boundary_id
+                  for r in pip_join(p, how=how, index=index).collect()}
+        exact = {r.pid: r.boundary_id
+                 for r in pip_join(p, b, how=how, hybrid=False).collect()}
+        brute = {i: (None if w < 0 else int(w)) for i, w in enumerate(want)
+                 if how == "left" or w >= 0}
+        assert hybrid == exact == brute, how
+
+
+def test_pip_submap_covers_only_boundary_children(spark):
+    from osmgraft.geo.pip import SUB_ROW_CAP, PipIndex, sub_levels
+
+    b, _, _ = refined_boundaries(spark)
+    for res in (5, 7, 8):
+        index = PipIndex.build(b, res=res)
+        parents = {r._pipcell for r in
+                   index.cellmap.where("_cell_boundary").select("_pipcell").collect()}
+        sub = index.submap.select(
+            parent_cell_col(F.col("_pipsub"), index.sub_res, res).alias("parent"),
+            "_sub_boundary").collect()
+        levels = index.sub_res - res
+        assert levels == sub_levels(len(parents), res) >= 1
+        assert {r.parent for r in sub} == parents
+        assert len(sub) == len(parents) * 4 ** levels <= SUB_ROW_CAP
+        assert 0 < sum(r._sub_boundary for r in sub) < len(sub)
+    assert sub_levels(1944, 7) == 3
+    assert sub_levels(5000, 7) == 2
+    assert sub_levels(65536, 8) == 1 and 65536 * 4 <= SUB_ROW_CAP
+    assert sub_levels(10, 25) == 1
+
+
+def test_strtree_contains_first_wins_order():
+    """Overlapping rings: the grouped ray-cast returns exactly the pairs,
+    in the same order, that a per-ring mask over the candidates gives."""
+    rng = np.random.default_rng(21)
+    rings = []
+    for _ in range(30):
+        cx, cy = rng.uniform(0, 300, 2)
+        h = rng.uniform(20, 80)
+        rings.append(np.array([[cx - h, cy - h], [cx + h, cy - h],
+                               [cx, cy + h], [cx - h, cy - h]]))
+    tree = STRtree(rings)
+    px, py = rng.uniform(0, 300, 3000), rng.uniform(0, 300, 3000)
+    pi, ri = tree.query_points(px, py)
+    keep = np.zeros(len(pi), dtype=bool)
+    for ring_id in np.unique(ri):
+        sel = ri == ring_id
+        keep[sel] = _ray_cast(rings[ring_id], px[pi[sel]], py[pi[sel]])
+    got_pi, got_ri = tree.contains(px, py)
+    assert np.array_equal(got_pi, pi[keep]) and np.array_equal(got_ri, ri[keep])
+    assert len(np.unique(got_pi)) < len(got_pi)  # rings do overlap
+
+
 def test_mercator_bridge_jvm_numpy_sql(spark):
     """lat/lng -> EPSG:3857 must agree bit-for-bit across the JVM Column,
     numpy, and DuckDB-SQL backends, and invert correctly (reference CRS,

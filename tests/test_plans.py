@@ -57,6 +57,23 @@ def test_pip_interior_path_has_no_python(spark):
     assert "FlatMapGroupsInPandas" not in plan and "MapInPandas" not in plan
 
 
+def test_pip_boundary_tiles_single_raycast(spark):
+    """Hybrid PIP on non-aligned tiles: both cell maps are cut and
+    broadcast, so the plan holds exactly one Python step, the ray-cast."""
+    from osmgraft.geo.geometry import polygon_wkb
+    from osmgraft.geo.pip import pip_join
+    from tests.test_geo import lattice_rings
+
+    b = spark.createDataFrame(
+        [(i, bytearray(polygon_wkb(r))) for i, r in enumerate(lattice_rings())],
+        "boundary_id long, polygon_wkb binary")
+    pts = spark.range(1000).select(
+        (F.col("id") * 173.0).alias("x"), (F.col("id") * 97.0).alias("y"))
+    plan = plan_of(pip_join(pts, b, how="left"))
+    assert plan.count("MapInPandas") == 1
+    assert plan.count("BroadcastHashJoin") >= 2
+
+
 def test_filter_pushdown_reaches_parquet(spark):
     """Predicate + column pruning must reach the scan (PushedFilters /
     ReadSchema) — free Catalyst wins the engine relies on (SURVEY.md §4)."""
