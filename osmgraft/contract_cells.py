@@ -1966,12 +1966,15 @@ def grid_dbscan(
         .select("cell_a", "cell_b")
         .distinct()
     )
-    n_occ = reps_df.count()
-    if n_occ <= _DBSCAN_DRIVER_CC_MAX():
+    # one capped probe decides the path: at most cap + 1 rows reach the
+    # driver, and below the cap the probe already is the full relation
+    cap = _DBSCAN_DRIVER_CC_MAX()
+    probe = reps_df.limit(cap + 1).collect()
+    if len(probe) <= cap:
         # sandbox / bounded-extent path: exact driver union-find over
         # two bounded collects (the occupied-CORE-cell relation — cells,
         # not points)
-        reps = {int(r.cell_id): int(r.rep) for r in reps_df.collect()}
+        reps = {int(r.cell_id): int(r.rep) for r in probe}
         parent = {cid: cid for cid in reps}
 
         def _find(x: int) -> int:

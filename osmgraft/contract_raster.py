@@ -3,11 +3,10 @@
 The north-star brief names "raster-to-vector tile aggregation" as a core
 capability; the registry already has the raster ANALYSIS half
 (``raster_slope_aspect`` gradients, ``flow_accumulation_d8`` hydrology,
-``kde_heatmap`` / ``idw_grid_interpolation`` surfaces, ``line_of_sight_profile``
-viewshed).  This module adds the raster→VECTOR extraction half — the ops a
-GIS pipeline runs to turn the density raster back into vector products —
-plus the spatial-backbone op (Euclidean MST) that vector post-processing
-feeds into:
+``kde_heatmap`` / ``idw_grid_interpolation`` surfaces).  This module adds
+the raster→VECTOR extraction half — the ops a GIS pipeline runs to turn
+the density raster back into vector products — plus the spatial-backbone
+op (Euclidean MST) that vector post-processing feeds into:
 
 - ``marching_squares_cases``: iso-contour extraction census (the marching
   squares algorithm, Lorensen & Cline's 2-D case) at the mean-density
@@ -43,7 +42,7 @@ feeds into:
   weight order).  At raw-point scale the same op runs as Boruvka rounds
   over cell-blocked candidate edges; the hub reduction is the bounded
   form every engine query here uses for iterative models (cf.
-  ``bradley_terry_strengths``, ``markov_steady_state``).
+  ``markov_steady_state``).
 
 Reference surface generalized: the reference renders per-area density
 tables and tile scores (generate_weekly_report.sh score-distribution
@@ -436,8 +435,7 @@ def mst_hub_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
     after runs on bounded post-agg relations (<=37 hubs).  At raw-point
     scale the same op is Boruvka rounds over cell-blocked candidate
     edges; the closure form is the bounded-relation analogue this
-    registry uses for iterative models (``bradley_terry_strengths``,
-    ``markov_steady_state``).
+    registry uses for iterative models (``markov_steady_state``).
     """
     hubs = (
         t(spark, sf_dir, "events")

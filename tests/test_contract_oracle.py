@@ -9,11 +9,7 @@ import pandas as pd
 import pytest
 
 from tests.conftest import SF_CORRECT
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+from tools.parity_sweep import TABLES, canon
 
 
 def _duck(sf_dir: str):
@@ -23,22 +19,6 @@ def _duck(sf_dir: str):
             f"CREATE VIEW {tbl} AS SELECT * FROM '{sf_dir}/{tbl}.parquet'"
         )
     return con
-
-
-def _canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].astype(str)
-        elif str(df[c].dtype).startswith("float"):
-            df[c] = df[c].round(6)
-        elif str(df[c].dtype) in ("Int64", "int32", "uint64"):
-            df[c] = df[c].astype("float64")  # unify nullable/int widths
-        elif str(df[c].dtype).startswith("int"):
-            df[c] = df[c].astype("float64")
-        elif str(df[c].dtype).startswith("datetime"):
-            df[c] = df[c].astype("datetime64[us]").astype(str)
-    return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
 
 def _pairs():
@@ -61,7 +41,7 @@ def test_oracle_match(spark, name, fn, sql):
         f"{name}: columns {sorted(sdf.columns)} != {sorted(ddf.columns)}"
     )
     assert len(sdf) == len(ddf), f"{name}: rows {len(sdf)} != {len(ddf)}"
-    a, b = _canon(sdf), _canon(ddf)
+    a, b = canon(sdf), canon(ddf)
     pd.testing.assert_frame_equal(a, b, check_dtype=False, atol=1e-6,
                                   obj=name)
 

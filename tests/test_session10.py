@@ -1,5 +1,6 @@
-"""Session-10 operator invariants: Getis-Ord Gi*, RFM segmentation,
-item-item CF, MAD outliers, co-movement pairs, LPA communities.
+"""Session-10 operator invariants: Getis-Ord Gi*, Moran's I, RFM
+segmentation, item-item CF, MAD outliers, co-movement pairs, LPA
+communities.
 
 Each test recomputes the operator's semantics through an INDEPENDENT
 path (numpy / pure Python / single-window Spark) and compares against
@@ -82,6 +83,14 @@ def test_getis_ord_matches_numpy_reference(spark):
     assert classes.get("hot99", 0) > 0
     for _, r in out.iterrows():
         assert abs(zmax[r.g_class] - r.max_z) < 1e-3
+
+
+def test_morans_i_detects_clustering(spark):
+    """The global companion of Gi*: on the hotspot mixture Moran's I is
+    positive, computed over the full 80x80 grid (empty cells included)."""
+    r = QUERIES["morans_i_autocorrelation"](spark, SF_CORRECT).collect()[0]
+    assert r["morans_i"] > 0
+    assert r["n_cells"] == 6400
 
 
 # ---------------------------------------------------------------------------

@@ -203,114 +203,3 @@ class TestMstHubBackbone:
         # heaviest-first ordering
         ws = [r["weight"] for r in got]
         assert ws == sorted(ws, reverse=True)
-
-
-def _cents_events() -> pd.DataFrame:
-    ev = pd.read_parquet(f"{SF_CORRECT}/events.parquet")
-    ev["cents"] = np.floor(ev["value"].to_numpy() * 100.0).astype(np.int64)
-    ev["day"] = ev["ts"].dt.normalize()
-    return ev
-
-
-class TestOnewayAnova:
-    def test_matches_numpy(self, spark):
-        from osmgraft.contract_classics import oneway_anova_f
-
-        row = oneway_anova_f(spark, SF_CORRECT).collect()[0]
-        ev = _cents_events()
-        groups = [
-            ev.loc[ev.event_type == ty, "cents"].to_numpy(float)
-            for ty in ("click", "error", "purchase", "signup", "view")
-        ]
-        allv = np.concatenate(groups)
-        n, k = len(allv), 5
-        gm = allv.mean()
-        ssb = sum(len(g) * (g.mean() - gm) ** 2 for g in groups)
-        ssw = sum(((g - g.mean()) ** 2).sum() for g in groups)
-        f = (ssb / (k - 1)) / (ssw / (n - k))
-        assert row["n_total"] == n
-        assert row["df_within"] == n - k
-        assert abs(row["f_micro"] / 1e6 - f) < 1e-3
-        assert abs(row["ssb_dollars2"] - ssb / 1e4) < 0.5
-        assert abs(row["eta2_ppm"] / 1e6 - ssb / (ssb + ssw)) < 1e-4
-        want = "means_differ" if f > 2.371944 else "no_difference"
-        assert row["verdict"] == want
-
-
-class TestCochranQ:
-    def test_matches_numpy(self, spark):
-        from osmgraft.contract_classics import cochran_q_test
-
-        row = cochran_q_test(spark, SF_CORRECT).collect()[0]
-        ev = _cents_events()
-        cnt = ev.groupby(["user_id", "event_type"]).size().unstack(fill_value=0)
-        nu = len(cnt)
-        x = (cnt.to_numpy() * nu > cnt.to_numpy().sum(axis=0)).astype(int)
-        c = x.sum(axis=0)
-        r = x.sum(axis=1)
-        t_ = int(c.sum())
-        q_stat = 4 * (5 * int((c**2).sum()) - t_**2) / (5 * t_ - int((r**2).sum()))
-        assert row["n_users"] == nu
-        assert row["t_flags"] == t_
-        assert abs(row["q_micro"] / 1e6 - q_stat) < 1e-4
-        want = "rates_differ" if q_stat > 9.487729 else "no_difference"
-        assert row["verdict"] == want
-
-
-class TestDistanceCorrelation:
-    def test_matches_numpy(self, spark):
-        from osmgraft.contract_classics import distance_correlation_daily
-
-        row = distance_correlation_daily(spark, SF_CORRECT).collect()[0]
-        ev = _cents_events()
-        days = sorted(ev["day"].unique())
-        u = (
-            ev[ev.user_id % 2 == 0].groupby("day")["cents"].sum()
-            .reindex(days, fill_value=0).to_numpy(float)
-        )
-        v = (
-            ev[ev.user_id % 2 == 1].groupby("day")["cents"].sum()
-            .reindex(days, fill_value=0).to_numpy(float)
-        )
-        n = len(days)
-        a = np.abs(u[:, None] - u[None, :])
-        b = np.abs(v[:, None] - v[None, :])
-        A = a - a.mean(0) - a.mean(1)[:, None] + a.mean()
-        B = b - b.mean(0) - b.mean(1)[:, None] + b.mean()
-        dcor = np.sqrt(
-            (A * B).sum() / np.sqrt((A * A).sum() * (B * B).sum())
-        )
-        r = np.corrcoef(u, v)[0, 1]
-        assert row["n_days"] == n
-        assert abs(row["dcor_micro"] / 1e6 - dcor) < 1e-4
-        assert abs(row["pearson_micro"] / 1e6 - r) < 1e-4
-        # dcor bounds: 0 <= dcor <= 1, and dcor >= |pearson| is NOT a
-        # theorem, but dcor > 0 always holds on non-constant data
-        assert 0 < row["dcor_micro"] <= 1_000_000
-
-
-class TestCronbachAlpha:
-    def test_matches_numpy(self, spark):
-        from osmgraft.contract_classics import cronbach_alpha
-
-        row = cronbach_alpha(spark, SF_CORRECT).collect()[0]
-        ev = _cents_events()
-        items = (
-            ev.groupby(["user_id", "event_type"])["cents"].sum()
-            .unstack(fill_value=0)
-            .reindex(
-                columns=["click", "error", "purchase", "signup", "view"],
-                fill_value=0,
-            )
-            .to_numpy(float)
-        )
-        k = items.shape[1]
-        vi = items.var(axis=0)  # population variance
-        vt = items.sum(axis=1).var()
-        alpha = k / (k - 1) * (1 - vi.sum() / vt)
-        assert row["k_items"] == k
-        assert row["n_users"] == items.shape[0]
-        assert abs(row["alpha_micro"] / 1e6 - alpha) < 1e-4
-        bands = [(0.9, "excellent"), (0.8, "good"), (0.7, "acceptable")]
-        want = next((b for th, b in bands if alpha >= th), "weak")
-        assert row["band"] == want
