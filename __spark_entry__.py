@@ -26,6 +26,7 @@ from osmgraft import contract_tracks as _contract_tracks  # noqa: E402,F401  (re
 from osmgraft import contract_corpus as _contract_corpus  # noqa: E402,F401  (registers entries)
 from osmgraft import contract_web as _contract_web  # noqa: E402,F401  (registers entries)
 from osmgraft import contract_select as _contract_select  # noqa: E402,F401  (registers entries)
+from osmgraft import contract_mining as _contract_mining  # noqa: E402,F401  (registers entries)
 from osmgraft import contract_raster as _contract_raster  # noqa: E402,F401  (registers entries)
 
 

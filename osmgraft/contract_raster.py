@@ -42,7 +42,7 @@ op (Euclidean MST) that vector post-processing feeds into:
   weight order).  At raw-point scale the same op runs as Boruvka rounds
   over cell-blocked candidate edges; the hub reduction is the bounded
   form every engine query here uses for iterative models (cf.
-  ``markov_steady_state``).
+  ``bradley_terry_strengths``, ``markov_steady_state``).
 
 Reference surface generalized: the reference renders per-area density
 tables and tile scores (generate_weekly_report.sh score-distribution
@@ -435,7 +435,8 @@ def mst_hub_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
     after runs on bounded post-agg relations (<=37 hubs).  At raw-point
     scale the same op is Boruvka rounds over cell-blocked candidate
     edges; the closure form is the bounded-relation analogue this
-    registry uses for iterative models (``markov_steady_state``).
+    registry uses for iterative models (``bradley_terry_strengths``,
+    ``markov_steady_state``).
     """
     hubs = (
         t(spark, sf_dir, "events")

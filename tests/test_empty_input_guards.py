@@ -1,11 +1,14 @@
-"""Empty-input guard.
+"""Round-5 advisor items: empty-input guards.
 
 - mrl_trunc_recall: an embeddings table with no vec_id % QMOD == 0 probe
   (here: no rows at all) must return the oracle's empty result instead of
   np.stack raising ValueError on an empty object array.
+- markov_removal_attribution: an empty events table collects zero chain
+  rows; vals["base"] indexing raised KeyError where the oracle returns
+  0 rows.
 
-Pinned against a zero-row parquet copy of the real sf0.001 schema so the
-schema path (read, cast, transform) still executes.
+Both are pinned against zero-row parquet copies of the real sf0.001
+schemas so the schema path (read, cast, transform) still executes.
 """
 
 from __future__ import annotations
@@ -19,6 +22,7 @@ sys.path.insert(0, ".")
 
 from osmgraft import contract as C  # noqa: E402
 from osmgraft import contract_text  # noqa: E402,F401  (registers entries)
+from osmgraft import contract_mining  # noqa: E402,F401  (registers entries)
 
 SF = "/root/testdata/sf0.001"
 
@@ -26,8 +30,9 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def empty_sf(tmp_path_factory):
     d = tmp_path_factory.mktemp("sf_empty")
-    t = pq.read_table(f"{SF}/embeddings.parquet")
-    pq.write_table(t.slice(0, 0), str(d / "embeddings.parquet"))
+    for tbl in ("events", "embeddings"):
+        t = pq.read_table(f"{SF}/{tbl}.parquet")
+        pq.write_table(t.slice(0, 0), str(d / f"{tbl}.parquet"))
     return str(d)
 
 
@@ -37,3 +42,35 @@ def test_mrl_trunc_recall_empty_probes(spark, empty_sf):
     assert [f.name for f in out.schema.fields] == [
         "trunc_dim", "n_queries", "mean_recall_at10", "mean_abs_sim_err",
     ]
+
+
+def test_markov_removal_attribution_empty_events(spark, empty_sf):
+    out = C.QUERIES["markov_removal_attribution"](spark, empty_sf)
+    assert out.count() == 0
+    assert [f.name for f in out.schema.fields] == [
+        "channel", "p_base_micro", "p_removed_micro",
+        "removal_effect_micro", "attribution_ppm",
+    ]
+
+
+@pytest.fixture(scope="module")
+def empty_events_only(tmp_path_factory):
+    d = tmp_path_factory.mktemp("sf_empty_ev")
+    t = pq.read_table(f"{SF}/events.parquet")
+    pq.write_table(t.slice(0, 0), str(d / "events.parquet"))
+    return str(d)
+
+
+@pytest.mark.parametrize("name", [
+    "policy_replay_eval", "metric_change_decomposition",
+    "cuped_adjustment", "fdr_bh_audit", "footrule_rank_shift",
+])
+def test_folded_calendar_queries_handle_empty_events(
+    spark, empty_events_only, name
+):
+    """Round-5 folds: the broadcast one-row cross-join scalars are NULL
+    on an empty events table (min/max of nothing); the plan must flow
+    that through to the oracle's empty result, not error."""
+    from osmgraft import contract_mining  # noqa: F401
+
+    assert C.QUERIES[name](spark, empty_events_only).count() == 0

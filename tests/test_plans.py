@@ -1220,6 +1220,79 @@ def test_duplicate_txn_window_includes_amount_key(spark):
             assert "user_id" in line and "dollars" in line, line
 
 
+# ---------------------------------------------------------------------------
+# session-12 operator plan audits
+# ---------------------------------------------------------------------------
+
+
+def test_snm_window_pairs_are_hash_join(spark):
+    """Sorted-neighborhood candidate pairs must come from the overlap-
+    block EQUI-join (hash), never a rank-range BNLJ — the whole point
+    of the block encoding."""
+    import osmgraft.contract_mining  # noqa: F401
+
+    df = QUERIES["sorted_neighborhood_pairs"](spark, SF_CORRECT)
+    plan = plan_of(df)
+    assert "HashJoin" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+
+
+def test_variogram_pairs_are_cell_blocked_equi_join(spark):
+    """Variogram pair generation must join on the (tx, ty) cell keys —
+    an equi hash join — with the distance predicate as a residual
+    filter, never the join strategy."""
+    import osmgraft.contract_mining  # noqa: F401
+
+    df = QUERIES["empirical_variogram"](spark, SF_CORRECT)
+    plan = plan_of(df)
+    assert "HashJoin" in plan
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_bloom_membership_is_broadcast_semi_join(spark):
+    """Bloom probe membership must plan as a broadcast LeftSemi on the
+    position key (the bit set is bounded by m)."""
+    import osmgraft.contract_mining  # noqa: F401
+
+    df = QUERIES["bloom_fpr_audit"](spark, SF_CORRECT)
+    plan = plan_of(df)
+    assert "LeftSemi" in plan
+    assert "BroadcastHashJoin" in plan
+
+
+def test_hard_negative_pairs_equi_join_on_bucket(spark):
+    """Hard-negative candidates come from the LSH-bucket equi-self-join
+    — never an all-pairs product."""
+    import osmgraft.contract_mining  # noqa: F401
+
+    df = QUERIES["hard_negative_mining"](spark, SF_CORRECT)
+    plan = plan_of(df)
+    assert "HashJoin" in plan
+    assert "CartesianProduct" not in plan
+
+
+def test_lindley_windows_are_user_keyed(spark):
+    """The Lindley closed form must run its windows PARTITIONED by
+    user — no single-partition global sort anywhere in the plan."""
+    import osmgraft.contract_mining  # noqa: F401
+
+    df = QUERIES["queue_wait_lindley"](spark, SF_CORRECT)
+    plan = plan_of(df)
+    assert "SinglePartition" not in plan
+
+
+def test_peak_concurrency_sweep_is_hour_keyed(spark):
+    """The +-1 sweep's running sum must be hour-partitioned (the carry
+    decomposition exists precisely to avoid a global ordered window)."""
+    import osmgraft.contract_mining  # noqa: F401
+
+    df = QUERIES["peak_concurrency"](spark, SF_CORRECT)
+    plan = plan_of(df)
+    assert "SinglePartition" not in plan
+
+
 def test_track_crossings_dedup_is_a_filter_not_a_shuffle(spark):
     """Candidate pairs must live inside the cell-cogrouped numpy kernel
     (second r04 rewrite) — the plan carries the FlatMapGroupsInPandas

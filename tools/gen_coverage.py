@@ -101,6 +101,7 @@ MODULE_SURFACE = {
     "osmgraft.contract_cells": "tier geo: cell indexes (hex/S2/quadkey/geohash)",
     "osmgraft.contract_tracks": "tier geo: tracks/trajectories",
     "osmgraft.contract_raster": "tier geo: raster/grid",
+    "osmgraft.contract_mining": "extension: mining/eval/audit statistics",
 }
 
 ROWS_ONLY_REASON = {
